@@ -31,9 +31,10 @@ object Bench {
     // deltas. Steps run as a dependency DAG (each starts when its memo
     // inputs are built, no wave barriers); warm_sec is the WALL time of
     // the warm phase, warm_breakdown the per-step elapsed times measured
-    // under that concurrency.
+    // under that concurrency (they overlap, so they do not sum to
+    // warm_sec), warm_errors the steps that failed.
     val warmT0 = System.nanoTime()
-    val warmTimes = SparkEntry.runWarm(spark, sfDir)
+    val warmRun = SparkEntry.runWarm(spark, sfDir)
     val warmSec = (System.nanoTime() - warmT0) / 1e9
     // SPARK_GRAFT_ONLY=q51,q55 narrows the run for local iteration; unset
     // (driver mode) benches the full inventory.
@@ -241,8 +242,11 @@ object Bench {
     // One JSON line; the long queries map comes FIRST so the headline
     // scalars land at the END of the line — the harness keeps only the
     // last ~2000 chars of output, and totals must survive that window.
-    val warmBreakdown = warmTimes
-      .map { case (step, t) => s"\"" + step + "\":" + sec(t) }
+    val warmBreakdown = warmRun
+      .map(w => s"\"" + w.name + "\":" + sec(w.seconds))
+      .mkString("{", ",", "}")
+    val warmErrors = warmRun
+      .flatMap(w => w.error.map(e => s"\"" + w.name + "\":" + jstr(e.take(200))))
       .mkString("{", ",", "}")
     val agg = if (throttled) "min+hist" else "min"
     val qsRaw = rawResults.map { case (k, v, err) =>
@@ -250,7 +254,7 @@ object Bench {
       s"\"" + k + "\":" + shown
     }.mkString("{", ",", "}")
     val line =
-      s"""{"queries":$qs,"errors":$errs,"sf":"$sfDir","passes":$passesRun,"chain_retries":${chainRetries.size},"throttled":$throttled,"chain_throttled":$throttled,"nonchain_single_sample":$nonchainSingleSample,"agg":"$agg","commit":"$commit","queries_raw":$qsRaw,"warm_breakdown":$warmBreakdown,"warm_sec":${sec(warmSec)},"prep_sec":${sec(prepSec)},"linkage_sec":${sec(linkSec)},"chain_sec":${sec(prepSec + linkSec)},"n_errors":$nErr,"metric":"total","value":${sec(total)},"unit":"sec"}"""
+      s"""{"queries":$qs,"errors":$errs,"sf":"$sfDir","passes":$passesRun,"chain_retries":${chainRetries.size},"throttled":$throttled,"chain_throttled":$throttled,"nonchain_single_sample":$nonchainSingleSample,"agg":"$agg","commit":"$commit","queries_raw":$qsRaw,"warm_breakdown":$warmBreakdown,"warm_errors":$warmErrors,"warm_sec":${sec(warmSec)},"prep_sec":${sec(prepSec)},"linkage_sec":${sec(linkSec)},"chain_sec":${sec(prepSec + linkSec)},"n_errors":$nErr,"metric":"total","value":${sec(total)},"unit":"sec"}"""
     println(line)
     // COMPACT second line, printed LAST so it lands inside the harness's
     // ~2000-char stdout tail window. The full line above is ~6 KB (157-query

@@ -1,6 +1,8 @@
 package graft
 
+import java.util.concurrent.CountDownLatch
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -27,91 +29,56 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = oracleMap
 
-  /** Populates the cross-query memo caches (linkage side frames, dedup
-    * gram frame) so benchmarks measure steady-state query time, not
-    * whichever query first pays the one-time cache build. Steps run as a
-    * dependency DAG ([[warmDeps]]): each starts the moment its declared
-    * dependencies finish, never at a wave barrier — at bench scale most
-    * memo builds are one- or two-task Spark jobs, so any serialization
-    * beyond the true dependencies is scheduler latency while executor
-    * threads idle (Spark job submission is thread-safe; each memo has its
-    * own lock). The critical path is the longest dependency chain
-    * (linkage_sides → linkage_reffiles → cascade_links), not the sum of
-    * wave maxima.
+  /** Every shared intermediate ([[Memo]]) the queries read. */
+  private def memos: Seq[Memo[_]] =
+    _root_.graft.queries.LinkageQueries.memos ++
+      _root_.graft.queries.PipelineQueries.memos ++
+      _root_.graft.queries.RefFileQueries.memos
+
+  /** Builds every memo for `sfDir` ([[runWarm]]) so benchmarks measure
+    * steady-state query time, not whichever query first pays a one-time
+    * build. Failures are dropped here; [[runWarm]] reports them.
     */
   def warm(spark: SparkSession, sfDir: String): Unit = {
     runWarm(spark, sfDir); ()
   }
 
-  /** Named memo builds — Bench times each and emits the per-step
-    * `warm_breakdown` map alongside the `warm_sec` (wall-clock) total.
+  /** One named step per memo, forcing it: builds its value and counts
+    * every frame it holds.
     */
-  def warmSteps: Seq[(String, (SparkSession, String) => Unit)] =
-    _root_.graft.queries.LinkageQueries.warmSteps ++
-      _root_.graft.queries.PipelineQueries.warmSteps ++
-      _root_.graft.queries.RefFileQueries.warmSteps
+  def warmSteps: Seq[(String, (SparkSession, String) => Unit)] = memos.map(_.step)
 
-  /** Each step's memo-cache dependencies (a step reads frames another
-    * step builds; running them concurrently would serialize on the memo
-    * lock anyway, with the LOSER's timer charged for the winner's build).
-    * linkage_sides/reffiles share one memoized tuple — sides pays the
-    * build, reffiles forces the remaining cached frames. emb_pairs and
-    * emb_corpus_cells each run their own assignment over the
-    * emb_dup_norms frame; ivf/brute read emb_norms; jaccard_banded joins
-    * the gram frame with the minhash band candidates.
+  /** Each step's dependencies: the memos its build reads, as declared on
+    * the memo ([[Memo.deps]]; a spec checks every observed read is
+    * declared).
     */
-  def warmDeps: Map[String, Seq[String]] = Map(
-    "linkage_reffiles" -> Seq("linkage_sides"),
-    "linkage_scored_block" -> Seq("linkage_sides"),
-    "linkage_cost_summary" -> Seq("linkage_sides"),
-    "cascade_links" -> Seq("linkage_sides", "linkage_reffiles"),
-    "jaccard_banded" -> Seq("grams", "minhash_bands"),
-    "ivf_assign" -> Seq("emb_norms"),
-    "brute_knn" -> Seq("emb_norms"),
-    "pq_codes" -> Seq("emb_norms"),
-    "emb_ranked_dup" -> Seq("emb_dup_norms"),
-    "emb_pairs" -> Seq("emb_dup_norms", "emb_ranked_dup"),
-    "emb_corpus_cells" -> Seq("emb_dup_norms", "emb_ranked_dup"),
-    "image_class_pairs" -> Seq("image_sigs"),
-    "reffile_accuracy" -> Seq("reffile_chain"))
+  def warmDeps: Map[String, Seq[String]] =
+    memos.map(m => m.name -> m.deps.map(_.name)).toMap
 
-  /** Runs [[warmSteps]] as the [[warmDeps]] DAG; returns (step, seconds)
-    * where seconds is the step's own elapsed time (excluding the wait on
-    * its dependencies). A failed step reports its elapsed time and
-    * swallows the error (warm is best-effort; the consuming query will
-    * surface a real failure); its dependents still run.
+  /** One warm step's outcome: its own elapsed seconds (not counting the
+    * wait on its dependencies) and, if it failed, the error.
     */
-  def runWarm(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+  final case class WarmStep(name: String, seconds: Double, error: Option[String])
+
+  /** Runs [[warmSteps]] as the [[warmDeps]] DAG, one thread per step:
+    * each step starts the moment its dependencies finish, so the wall is
+    * the longest dependency chain, not the sum. Step seconds are measured
+    * under that concurrency and overlap. A failed step is reported with
+    * its error; its dependents still run (their own memo reads then
+    * surface the failure).
+    */
+  def runWarm(spark: SparkSession, sfDir: String): Seq[WarmStep] = {
     val steps = warmSteps
-    val pool = Executors.newFixedThreadPool(math.max(steps.size, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val done = scala.collection.mutable.Map.empty[String, Future[Double]]
-    def futureOf(name: String): Future[Double] = done.synchronized {
-      done.getOrElseUpdate(name, {
-        val f = steps.find(_._1 == name)
-          .map(_._2).getOrElse((_: SparkSession, _: String) => ())
-        Future.sequence(warmDeps.getOrElse(name, Nil).map(futureOf)).map { _ =>
-          val t0 = System.nanoTime()
-          try f(spark, sfDir) catch { case _: Throwable => }
-          (System.nanoTime() - t0) / 1e9
-        }
-      })
-    }
-    // Create EVERY step's future up front, then await: the previous
-    // await-as-you-create loop only instantiated step k+1's future after
-    // step k completed (dependencies point backward in the list), so the
-    // "DAG" actually executed near-serially — warm wall ≈ sum of step
-    // times in every bench through r18. With eager creation each step
-    // starts the moment its declared dependencies finish and the wall is
-    // the critical path (guide §2.6).
-    val futures = steps.map { case (name, _) => name -> futureOf(name) }
-    val out = futures.map { case (name, f) =>
-      (name, Await.result(f, Duration.Inf))
-    }
-    pool.shutdown()
-    out
+    val deps = warmDeps
+    val finished = steps.map { case (name, _) => name -> new CountDownLatch(1) }.toMap
+    Memo.par(steps.map { case (name, force) => () =>
+      deps(name).foreach(finished(_).await())
+      val t0 = System.nanoTime()
+      val error =
+        try { force(spark, sfDir); None }
+        catch { case NonFatal(e) => Some(e.toString) }
+        finally finished(name).countDown()
+      WarmStep(name, (System.nanoTime() - t0) / 1e9, error)
+    })
   }
 }

@@ -145,16 +145,15 @@ object Bpe {
   private def overlay_replace(src: Column, search: String, rep: String): Column =
     call_function("replace", src, lit(search), lit(rep))
 
-  /** Merge list memo per (session, sf-dir): q135 and q82 (and their
-    * specs) share one training run per corpus, the cross-query memo
-    * pattern the linkage cascade uses. Bounded: one merge list per dir.
+  /** Merge list memo: q135 and q82 (and their specs) share one training
+    * run per corpus, the cross-query memo pattern the linkage cascade
+    * uses. Holds the merge list of the latest (session, sf-dir) only; it
+    * pins no frame (training releases its own scratch).
     */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Seq[(String, String)]]
-
-  def mergesFor(s: org.apache.spark.sql.SparkSession, d: String): Seq[(String, String)] =
-    mergeCache.getOrElseUpdate((s, d),
-      trainMerges(graft.Tables.documents(s, d).select("doc_id", "text")))
+  lazy val mergesFor = graft.Memo("bpe_merges")(
+      (_: Seq[(String, String)]) => Seq.empty[DataFrame]) { (s, d) =>
+    trainMerges(graft.Tables.documents(s, d).select("doc_id", "text"))
+  }
 
   /** Per-doc subword counts under a trained merge list:
     * (doc_id, n_words, n_bpe_tokens). The word→count dimension is

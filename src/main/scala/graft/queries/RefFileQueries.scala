@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.QueryDef
+import graft.{Memo, QueryDef}
 import graft.operators.{Noise, Preprocess}
 import graft.ops.{DfOps, Lineage}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -396,42 +396,16 @@ object RefFileQueries {
       Seq(t1040, w2, ndrFull, pFull, abys, pA, geob, pG)
   }
 
-  private val chainFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), RefChain]
-
-  private def refChain(s: SparkSession, d: String): RefChain =
-    chainFrames.synchronized {
-      chainFrames.getOrElse((s, d), {
-        chainFrames.values.foreach(_.cached.foreach(_.unpersist()))
-        chainFrames.clear()
-        val t = t1040(s, d).cache()
-        val w = w2(s, d).cache()
-        val (ndrFull, pFull) = nameDobRefFull(s, d, t)
-        val (abys, pA) = addressesBySsn(s, d, t, w)
-        val (geob, pG) = Lineage.mergePreservingSourceRecords(
-          ndrFull.cache(), pFull.cache(), abys.cache(), pA.cache(),
-          Seq("ssn"), "geo")
-        val chain = RefChain(t, w, ndrFull, pFull, abys, pA,
-          geob.cache(), pG.cache())
-        // Dev attribution only (GRAFT_REF_TIMING): force each cached stage
-        // in dependency order and print its marginal build time. Off, the
-        // stages materialize lazily inside the warm counts as before.
-        if (sys.env.contains("GRAFT_REF_TIMING")) {
-          def force(label: String, df: DataFrame): Unit = {
-            val t0 = System.nanoTime()
-            df.count()
-            System.err.println(
-              f"REFCHAIN $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-          force("t1040", t); force("w2", w)
-          force("ndrFull", ndrFull); force("pFull", pFull)
-          force("abys", abys); force("pA", pA)
-          force("geob", geob); force("pG", pG)
-        }
-        chainFrames.put((s, d), chain)
-        chain
-      })
-    }
+  private lazy val refChain = Memo("reffile_chain")((_: RefChain).cached) { (s, d) =>
+    val t = t1040(s, d).cache()
+    val w = w2(s, d).cache()
+    val (ndrFull, pFull) = nameDobRefFull(s, d, t)
+    val (abys, pA) = addressesBySsn(s, d, t, w)
+    val (geob, pG) = Lineage.mergePreservingSourceRecords(
+      ndrFull.cache(), pFull.cache(), abys.cache(), pA.cache(),
+      Seq("ssn"), "geo")
+    RefChain(t, w, ndrFull, pFull, abys, pA, geob.cache(), pG.cache())
+  }
 
   /** The notebook-04 accuracy inputs, memoized and cached like the chain:
     * q120 (the three definitions) and q122 (incorrect/missed diagnosis)
@@ -456,73 +430,57 @@ object RefFileQueries {
     def cached: Seq[DataFrame] = Seq(refGt, piks, inRecs, piked, confirmed, psp)
   }
 
-  private val accCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), AccFrames]
-
-  private def accFrames(s: SparkSession, d: String): AccFrames =
-    accCache.synchronized {
-      accCache.getOrElse((s, d), {
-        accCache.values.foreach(_.cached.foreach(_.unpersist()))
-        accCache.clear()
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val c = refChain(s, d)
-        val truth = numident(s, d).select(col("record_id"), col("ssn").as("simulant_id"))
-          .unionByName(c.t1040.select(col("record_id"), col("k").as("simulant_id")))
-          .unionByName(c.w2.select(col("record_id"), col("k").as("simulant_id")))
-        // localCheckpoint, not cache: these frames embed the WHOLE tax
-        // chain in their logical plans, and q120's six output branches
-        // would re-ANALYZE that tree per branch (~20 s of driver planning
-        // at sf0.1, execution being trivial). Checkpointing truncates the
-        // lineage so consumers plan over a LogicalRDD.
-        //
-        // The eager checkpoints materialize in DEPENDENCY WAVES (guide
-        // §2.6 — refGt, piks and inRecs share no inputs beyond the already
-        // -cached chain, so their jobs overlap instead of running back to
-        // back; psp and piked both wait only on the first wave).
-        val refGtF = Future(
-          Lineage.resolveGroundTruth(c.pFull.unionByName(c.pG), truth)
-            .withColumnRenamed("n_truths", "n_unique_simulants").localCheckpoint())
-        val piksF = Future(DfOps.addContiguousId(
+  private lazy val accFrames =
+    Memo("reffile_accuracy", refChain)((_: AccFrames).cached) { (s, d) =>
+      val c = refChain(s, d)
+      val truth = numident(s, d).select(col("record_id"), col("ssn").as("simulant_id"))
+        .unionByName(c.t1040.select(col("record_id"), col("k").as("simulant_id")))
+        .unionByName(c.w2.select(col("record_id"), col("k").as("simulant_id")))
+      // localCheckpoint, not cache: these frames embed the WHOLE tax
+      // chain in their logical plans, and q120's six output branches
+      // would re-ANALYZE that tree per branch (~20 s of driver planning
+      // at sf0.1, execution being trivial). Checkpointing truncates the
+      // lineage so consumers plan over a LogicalRDD.
+      //
+      // The eager checkpoints materialize in DEPENDENCY WAVES (guide
+      // §2.6 — refGt, piks and inRecs share no inputs beyond the already
+      // -cached chain, so their jobs overlap instead of running back to
+      // back; psp and piked both wait only on the first wave).
+      val holders = pmod(col("k"), lit(5)) =!= 4
+      val itinFiler = pmod(col("k"), lit(5)) === 4 && pmod(col("k"), lit(3)) === 0
+      val missedLink = holders && pmod(col("k"), lit(67)) === 0
+      val wrongLink = holders && pmod(col("k"), lit(83)) === 0 &&
+        pmod(col("k") + 1, lit(5)) =!= 4
+      val Seq(refGt, piks, inRecs) = Memo.par(Seq(
+        () => Lineage.resolveGroundTruth(c.pFull.unionByName(c.pG), truth)
+          .withColumnRenamed("n_truths", "n_unique_simulants").localCheckpoint(),
+        () => DfOps.addContiguousId(
             c.ndrFull.select("ssn").distinct(), "ssn", "pik")
-          .select("ssn", "pik").localCheckpoint())
-        val holders = pmod(col("k"), lit(5)) =!= 4
-        val itinFiler = pmod(col("k"), lit(5)) === 4 && pmod(col("k"), lit(3)) === 0
-        val missedLink = holders && pmod(col("k"), lit(67)) === 0
-        val wrongLink = holders && pmod(col("k"), lit(83)) === 0 &&
-          pmod(col("k") + 1, lit(5)) =!= 4
-        val inRecsF = Future(People.persons(s, d).select(
+          .select("ssn", "pik").localCheckpoint(),
+        () => People.persons(s, d).select(
           concat(lit("cin_"), col("k")).as("in_id"),
           col("k").as("simulant_in"),
           when(missedLink, lit(null).cast("long"))
             .when(wrongLink, col("k") + 1)
             .when(holders, col("k"))
             .when(itinFiler, lit(900000000L) + col("k"))
-            .otherwise(lit(null).cast("long")).as("assigned_ssn")).localCheckpoint())
-        val refGt = Await.result(refGtF, Duration.Inf)
-        val piks = Await.result(piksF, Duration.Inf)
-        val inRecs = Await.result(inRecsF, Duration.Inf)
-        val recPik = c.ndrFull.select("record_id", "ssn")
-          .unionByName(c.geob.select("record_id", "ssn"))
-          .join(piks, Seq("ssn"))
-        val pspF = Future(refGt.join(recPik, Seq("record_id"))
+            .otherwise(lit(null).cast("long")).as("assigned_ssn")).localCheckpoint()))
+      val recPik = c.ndrFull.select("record_id", "ssn")
+        .unionByName(c.geob.select("record_id", "ssn"))
+        .join(piks, Seq("ssn"))
+      val Seq(psp, piked) = Memo.par(Seq(
+        () => refGt.join(recPik, Seq("record_id"))
           .select("pik", "simulant_id").distinct()
           .withColumn("nu", count(lit(1)).over(Window.partitionBy("pik")))
-          .localCheckpoint())
-        val pikedF = Future(inRecs
+          .localCheckpoint(),
+        () => inRecs
           .join(piks.withColumnRenamed("ssn", "assigned_ssn"), Seq("assigned_ssn"))
-          .localCheckpoint())
-        val psp = Await.result(pspF, Duration.Inf)
-        val piked = Await.result(pikedF, Duration.Inf)
-        val confirmed = piked.join(
-          c.geob.groupBy("ssn").agg(min("record_id").as("ref_id"))
-            .withColumnRenamed("ssn", "assigned_ssn"),
-          Seq("assigned_ssn")).localCheckpoint()
-        val a = AccFrames(refGt, piks, inRecs, piked, confirmed, psp)
-        accCache.put((s, d), a)
-        a
-      })
+          .localCheckpoint()))
+      val confirmed = piked.join(
+        c.geob.groupBy("ssn").agg(min("record_id").as("ref_id"))
+          .withColumnRenamed("ssn", "assigned_ssn"),
+        Seq("assigned_ssn")).localCheckpoint()
+      AccFrames(refGt, piks, inRecs, piked, confirmed, psp)
     }
 
   /** SQL mirror of [[accFrames]] (expects the refBase + geob CTEs in
@@ -570,19 +528,13 @@ object RefFileQueries {
        |  JOIN (SELECT ssn, min(record_id) AS ref_id FROM geob GROUP BY ssn) rc
        |    ON pk.assigned_ssn = rc.ssn)""".stripMargin
 
-  /** Bench warm hooks: materialize the cached chain + accuracy frames so
-    * their one-time build cost is attributed to warm, not to whichever
-    * consumer runs first.
+  /** The shared intermediates of the reference-file queries, in warm
+    * order.
     */
-  def warmSteps: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "reffile_chain" -> ((s: SparkSession, d: String) => {
-      val c = refChain(s, d)
-      c.geob.count(); c.pG.count(); ()
-    }),
-    "reffile_accuracy" -> ((s: SparkSession, d: String) => {
-      val a = accFrames(s, d)
-      a.confirmed.count(); a.psp.count(); ()
-    }))
+  private[graft] lazy val memos: Seq[Memo[_]] = Seq(refChain, accFrames)
+
+  /** One warm step per memo (`warm_breakdown` in the bench JSON). */
+  def warmSteps: Seq[(String, (SparkSession, String) => Unit)] = memos.map(_.step)
 
   private val refBase = s"$base,\n$taxCtes,\n$abysCtes,\n$ndrCtes"
 
