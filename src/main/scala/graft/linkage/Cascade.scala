@@ -56,13 +56,23 @@ final case class LinkageConfig(
   * input record).
   *
   * Scale shape per pass: one shuffle join on the block keys + codegen'd
-  * scalar scoring + one window over rec_id. The accumulated-links anti-join
-  * is a shuffle on rec_id only. Nothing is collected to the driver.
+  * scalar scoring + one window over rec_id. Per lookahead group of passes:
+  * one more window over rec_id (pass precedence) and one remainder
+  * anti-join, both over the tiny link frames. Nothing is collected to the
+  * driver.
   */
 object LinkageCascade {
 
   private def prefixed(df: DataFrame, p: String): DataFrame =
     df.select(df.columns.map(c => col(c).as(s"$p$c")): _*)
+
+  /** The input side as a pass blocks and scores it: the pass's
+    * [[BlockingPass.rightRemap]] (name-switch) applied.
+    */
+  private def remapped(input: DataFrame, pass: BlockingPass): DataFrame =
+    if (pass.rightRemap.isEmpty) input
+    else input.select(input.columns.map(c =>
+      col(pass.rightRemap.getOrElse(c, c)).as(c)): _*)
 
   /** Candidate pairs for a pass: equi-join census × input on block keys.
     * When `salt > 1`, both sides get a salt column derived from the
@@ -71,12 +81,8 @@ object LinkageCascade {
     * the block key + a hash of the left row id (joined against all salts).
     */
   def pairs(census: DataFrame, input: DataFrame, pass: BlockingPass): DataFrame = {
-    val right =
-      if (pass.rightRemap.isEmpty) input
-      else input.select(input.columns.map(c =>
-        col(pass.rightRemap.getOrElse(c, c)).as(c)): _*)
     val l = prefixed(census, "l_")
-    val r = prefixed(right, "r_")
+    val r = prefixed(remapped(input, pass), "r_")
     val cond = pass.blockKeys.map(k => col(s"l_$k") === col(s"r_$k")).reduce(_ && _)
     if (pass.salt <= 1) l.join(r, cond)
     else {
@@ -124,127 +130,125 @@ object LinkageCascade {
       .dropDuplicates(Seq("rec_id"))
   }
 
-  /** One full predict pass: block → score (+ the pass's fixed weight
-    * offset, e.g. hhcompsearch's bayes_factor_cut_columns=1000) →
-    * threshold → resolve.
+  /** A pass's thresholded candidate links, before best-link resolution:
+    * block → score (+ the pass's fixed weight offset, e.g. hhcompsearch's
+    * bayes_factor_cut_columns=1000) → threshold → project to
+    * (pik, rec_id, match_weight). Row-local past the block join, so it
+    * runs unchanged over a stream in append mode (the streaming path
+    * resolves each micro-batch with [[bestLink]]).
     */
-  def predict(census: DataFrame, input: DataFrame, pass: BlockingPass, cfg: LinkageConfig): DataFrame = {
+  def candidates(census: DataFrame, input: DataFrame, pass: BlockingPass,
+      cfg: LinkageConfig): DataFrame = {
     val scored = score(pairs(census, input, pass), pass.comparisonsFor(cfg), pass.constGammas)
     val offset =
       if (pass.weightOffset == 0.0) scored
       else scored.withColumn("match_weight", col("match_weight") + lit(pass.weightOffset))
-    bestLink(
-      offset
-        .filter(col("match_weight") >= cfg.thresholdWeight)
-        .select(col("l_pik").as("pik"), col("r_rec_id").as("rec_id"), col("match_weight")))
+    offset
+      .filter(col("match_weight") >= cfg.thresholdWeight)
+      .select(col("l_pik").as("pik"), col("r_rec_id").as("rec_id"), col("match_weight"))
   }
 
-  /** Lookahead width of [[foldPasses]]'s overlapped execution: how many
-    * consecutive passes predict CONCURRENTLY over the same group-entry
-    * remainder before the anti-join chain is applied to their (tiny) link
-    * frames. 2-3 jobs in flight is the guide's §2.6 sweet spot — enough
-    * to back-fill the executor tail of one pass with the next pass's
-    * scan/join tasks, small enough that the within-group loss of anti-join
-    * pruning (a pass no longer skips the records its immediate
-    * predecessors in the SAME group link — bounded extra candidate
-    * scoring, exactly re-filtered afterwards) stays marginal.
+  /** One full predict pass: [[candidates]] resolved by [[bestLink]]. */
+  def predict(census: DataFrame, input: DataFrame, pass: BlockingPass, cfg: LinkageConfig): DataFrame =
+    bestLink(candidates(census, input, pass, cfg))
+
+  /** Lookahead width of [[foldPasses]]: how many consecutive passes
+    * predict CONCURRENTLY over the same group-entry remainder before
+    * pass precedence is resolved over their (tiny) link frames. 2-3 jobs
+    * in flight is the guide's §2.6 sweet spot — enough to back-fill the
+    * executor tail of one pass with the next pass's scan/join tasks, small
+    * enough that the within-group loss of remainder pruning (a pass still
+    * scores the records its predecessors in the SAME group link — bounded
+    * extra candidate scoring, dropped by the resolution) stays marginal.
     */
   val PassLookahead = 3
 
-  /** The cascade: passes run in order over the not-yet-linked remainder;
-    * links accumulate with the pass that produced them.
+  /** Pass precedence over a union of per-pass link frames tagged with
+    * `pass_ord`: per rec_id, only the rows of the lowest ordinal survive
+    * (the earliest pass to link a record wins, as in the sequential
+    * cascade). Each pass's [[bestLink]] leaves at most one row per rec_id,
+    * so the result has one row per linked record. Drops `pass_ord`.
+    */
+  private[graft] def firstPassWins(tagged: DataFrame): DataFrame =
+    tagged
+      .withColumn("first_ord", min("pass_ord").over(Window.partitionBy("rec_id")))
+      .filter(col("pass_ord") === col("first_ord"))
+      .drop("pass_ord", "first_ord")
+
+  /** Passes in lookahead groups of [[PassLookahead]]. A trailing
+    * undersized group merges into its predecessor (13 passes → 3+3+3+4,
+    * not 3+3+3+3+1): one fewer sequential barrier, and the widened group
+    * sits LAST, where passes link the fewest records, so the extra
+    * within-group candidate work is smallest.
+    */
+  private[graft] def passGroups[A](passes: Seq[A]): Seq[Seq[A]] = {
+    val gs = passes.grouped(math.max(1, PassLookahead)).toSeq
+    if (gs.size > 1 && gs.last.size < PassLookahead)
+      gs.dropRight(2) :+ (gs(gs.size - 2) ++ gs.last)
+    else gs
+  }
+
+  /** The one pass-precedence fold every cascade search runs through (main
+    * passes, hh passes, ZIP3 adjacency): passes run in order over the
+    * not-yet-linked remainder; returns (links with the pass that produced
+    * them, unlinked remainder).
     *
-    * Each pass's links are `localCheckpoint`ed (eager): the frame feeds BOTH
-    * the accumulator union and every later pass's anti-join, so without
-    * materialization pass 1's whole predict lineage is recomputed by each
-    * downstream consumer — at scale that multiplies the dominant join cost
-    * by the number of passes (the reference persists after each pass,
-    * df_ops.persist). The checkpointed links are tiny (ids + weight), so
-    * the later `remaining` anti-joins stay broadcast-sized and lineage
-    * stays shallow (input scan + one anti-join per completed pass).
+    * OVERLAPPED EXECUTION (guide §2.6 "overlap independent jobs"): passes
+    * are processed in [[passGroups]]. Within a group every pass predicts
+    * over the GROUP-ENTRY remainder, submitted concurrently through
+    * [[Memo.par]], so one pass's straggler tail back-fills with the next
+    * pass's scan/join tasks instead of idling the executors (per-pass wall
+    * at sf0.1 was a near-constant ~1.3-2.4 s even as the remainder shrank
+    * to a few percent: stage latency, not compute). Each pass's links are
+    * tagged with the pass ordinal and `localCheckpoint`ed (eager,
+    * MEMORY_ONLY), then the group resolves by [[firstPassWins]]: one
+    * window over the union, at any group width.
     *
-    * OVERLAPPED EXECUTION (guide §2.6 "overlap independent jobs"; round-19):
-    * passes are processed in groups of [[PassLookahead]]. Within a group
-    * every pass's predict runs over the GROUP-ENTRY remainder, submitted
-    * concurrently from a small thread pool, so one pass's straggler tail
-    * back-fills with the next pass's scan/join tasks instead of idling the
-    * executors — measured per-pass wall at sf0.1 was a near-constant
-    * ~1.3-2.4 s across all 15 passes even as the remainder shrank to a few
-    * percent, i.e. stage latency, not compute. Results are EXACTLY the
-    * sequential cascade's: records are independent through a pass (each
-    * record's candidates, threshold and best-link window condition only on
-    * its own rec_id — the property [[mainPasses]] documents and
-    * StreamingSpec pins), so predict(pass, r ∖ L) ≡ predict(pass, r)
-    * filtered to rec_id ∉ L; the within-group anti-join chain applies that
-    * filter to the concurrently-predicted link frames in pass order.
+    * Results are EXACTLY the sequential cascade's: records are independent
+    * through a pass (each record's candidates, threshold and best-link
+    * window condition only on its own rec_id — the property
+    * [[mainPasses]] documents and StreamingSpec pins), so predict(pass,
+    * r ∖ L) ≡ predict(pass, r) filtered to rec_id ∉ L, and keeping each
+    * record's lowest-ordinal link applies that filter for every pass of
+    * the group at once (LinkageSpec pins equality with a strict
+    * one-pass-at-a-time loop). The next remainder anti-joins the group's
+    * raw union of rec_ids — the same id set as the resolved links — so
+    * the window stays out of the remainder's lineage.
+    *
+    * Checkpointing: each link frame feeds the resolution AND the
+    * remainder anti-join; without materialization the pass's whole
+    * predict lineage would rerun per consumer (the reference persists
+    * after each pass, df_ops.persist). MEMORY_ONLY because the frames are
+    * tiny (ids + weight) and the default MEMORY_AND_DISK still writes
+    * blocks through the disk store — under I/O contention those writes
+    * stalled whole cascade runs (observed 2× swings at sf0.1). Caveat: a
+    * localCheckpoint has no lineage, so an EVICTED MEMORY_ONLY block is
+    * unrecoverable — acceptable for KB-scale frames against GB-scale
+    * storage memory.
     */
   private def foldPasses(
       refs: Map[String, DataFrame],
       input: DataFrame,
       passes: Seq[BlockingPass],
-      cfg: LinkageConfig,
-      acc0: Option[DataFrame]): (Option[DataFrame], DataFrame) = {
-    // A trailing undersized group merges into its predecessor (13 passes →
-    // 3+3+3+4, not 3+3+3+3+1): one fewer sequential barrier, and the
-    // widened group sits LAST, where passes link the fewest records, so
-    // the extra within-group candidate work is smallest.
-    val grouped = {
-      val gs = passes.grouped(math.max(1, PassLookahead)).toSeq
-      if (gs.size > 1 && gs.last.size < PassLookahead)
-        gs.dropRight(2) :+ (gs(gs.size - 2) ++ gs.last)
-      else gs
-    }
-    grouped.foldLeft((acc0, input)) {
-      case ((acc, remaining), group) =>
-        // MEMORY_ONLY: the link frames are tiny (ids + weight) but the
-        // default MEMORY_AND_DISK localCheckpoint still writes blocks
-        // through the disk store — under I/O contention those writes
-        // stalled whole cascade runs (observed 2× swings at sf0.1).
-        // Caveat: a localCheckpoint has no lineage, so an EVICTED
-        // MEMORY_ONLY block is unrecoverable — safe here because the
-        // frames are KB-scale against GB-scale storage memory; anything
-        // bigger (addContiguousId's full-table checkpoint) keeps the
-        // disk-backed default.
-        val predicted: Seq[(BlockingPass, DataFrame)] = Memo.par(group.map { pass => () =>
-          val census = refs.getOrElse(pass.ref, throw new IllegalArgumentException(
-            s"pass ${pass.name} searches reference frame '${pass.ref}' but run() " +
-              s"was given only ${refs.keys.mkString(", ")}"))
-          pass -> predict(census, remaining, pass, cfg)
-            .withColumn("pass", lit(pass.name))
-            .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-        })
-        // Within-group resolution IN PASS ORDER over the materialized
-        // frames: pass i keeps only records no earlier in-group pass
-        // linked (the cross-group exclusion already happened — every
-        // predict above read the group-entry remainder).
-        val resolved = predicted.foldLeft(Seq.empty[DataFrame]) {
-          case (done, (_, pl)) =>
-            val filtered = done.foldLeft(pl) { (df, earlier) =>
-              df.join(earlier.select("rec_id"), Seq("rec_id"), "left_anti")
-            }
-            done :+ filtered
-        }
-        val nextAcc = resolved.foldLeft(acc) { (a, links) =>
-          Some(a.fold(links)(_.unionByName(links)))
-        }
-        val nextRemaining = resolved.foldLeft(remaining) { (rem, links) =>
-          rem.join(links.select("rec_id"), Seq("rec_id"), "left_anti")
-        }
-        (nextAcc, nextRemaining)
-    }
+      cfg: LinkageConfig): (DataFrame, DataFrame) = {
+    val (links, remainder) =
+      passGroups(passes.zipWithIndex).foldLeft((Seq.empty[DataFrame], input)) {
+        case ((done, remaining), group) =>
+          val tagged = Memo.par(group.map { case (pass, ord) => () =>
+            val census = refs.getOrElse(pass.ref, throw new IllegalArgumentException(
+              s"pass ${pass.name} searches reference frame '${pass.ref}' but run() " +
+                s"was given only ${refs.keys.mkString(", ")}"))
+            predict(census, remaining, pass, cfg)
+              .withColumn("pass", lit(pass.name))
+              .withColumn("pass_ord", lit(ord))
+              .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+          }).reduce(_ unionByName _)
+          (done :+ firstPassWins(tagged),
+            remaining.join(tagged.select("rec_id"), Seq("rec_id"), "left_anti"))
+      }
+    (links.reduce(_ unionByName _), remainder)
   }
 
-  /** The hhcompsearch reference file (reference cells 126-138): bridge each
-    * input-side pseudo-household (its `geokey_blk`) through its already-
-    * linked members' PIKs to the census-side addresses of those PIKs, then
-    * take the UNLINKED census records at those addresses, tagged with the
-    * input household key they are candidates for. GQ records never enter
-    * (their geokey_blk is NULL — the reference excludes GQ "so it isn't
-    * used ... nor for HHCompSearch").
-    *
-    * Scale shape: the bridge is two equi-joins over the (small) link set;
-    * the candidate join is an equi-join on geokey. No cross products.
-    */
   /** Per-block cost report for a pass: each block key's side counts and
     * the implied candidate-pair count, heaviest first — the pre-flight
     * that decides which passes need `salt` (or a blocking redesign)
@@ -256,13 +260,9 @@ object LinkageCascade {
   def blockSkewReport(census: DataFrame, input: DataFrame, pass: BlockingPass,
       topN: Int = 20): DataFrame = {
     val keys = pass.blockKeys
-    val right =
-      if (pass.rightRemap.isEmpty) input
-      else input.select(input.columns.map(c =>
-        col(pass.rightRemap.getOrElse(c, c)).as(c)): _*)
     val l = census.na.drop(keys)
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_census"))
-    val r = right.na.drop(keys)
+    val r = remapped(input, pass).na.drop(keys)
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_input"))
     l.join(r, keys)
       .withColumn("n_pairs", col("n_census") * col("n_input"))
@@ -280,13 +280,9 @@ object LinkageCascade {
   def blockCostSummary(census: DataFrame, input: DataFrame,
       pass: BlockingPass): DataFrame = {
     val keys = pass.blockKeys
-    val right =
-      if (pass.rightRemap.isEmpty) input
-      else input.select(input.columns.map(c =>
-        col(pass.rightRemap.getOrElse(c, c)).as(c)): _*)
     val l = census.na.drop(keys)
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_census"))
-    val r = right.na.drop(keys)
+    val r = remapped(input, pass).na.drop(keys)
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_input"))
     l.join(r, keys)
       .select((col("n_census") * col("n_input")).as("n_pairs"))
@@ -404,6 +400,17 @@ object LinkageCascade {
     }
   }
 
+  /** The hhcompsearch reference file (reference cells 126-138): bridge each
+    * input-side pseudo-household (its `geokey_blk`) through its already-
+    * linked members' PIKs to the census-side addresses of those PIKs, then
+    * take the UNLINKED census records at those addresses, tagged with the
+    * input household key they are candidates for. GQ records never enter
+    * (their geokey_blk is NULL — the reference excludes GQ "so it isn't
+    * used ... nor for HHCompSearch").
+    *
+    * Scale shape: the bridge is two equi-joins over the (small) link set;
+    * the candidate join is an equi-join on geokey. No cross products.
+    */
   def hhcompReference(census: DataFrame, input: DataFrame, links: DataFrame): DataFrame = {
     val bridge = links.select("pik", "rec_id")
       .join(
@@ -470,10 +477,8 @@ object LinkageCascade {
     * micro-batch replay parity rests on; StreamingSpec pins it).
     */
   def mainPasses(refs: Map[String, DataFrame], input: DataFrame,
-      cfg: LinkageConfig): (DataFrame, DataFrame) = {
-    val (links, remaining) = foldPasses(refs, input, cfg.passes, cfg, None)
-    (links.get, remaining)
-  }
+      cfg: LinkageConfig): (DataFrame, DataFrame) =
+    foldPasses(refs, input, cfg.passes, cfg)
 
   /** The hhcompsearch finalization: build the household-composition
     * reference from ALL main-stage links (the bridge needs the global link
@@ -490,8 +495,8 @@ object LinkageCascade {
       val remaining = input
         .join(mainLinks.select("rec_id").distinct(), Seq("rec_id"), "left_anti")
       val rem = remaining.withColumn("hh_geokey", col("geokey_blk"))
-      val hhRefs = cfg.hhPasses.map(_.ref).toSet.map((n: String) => n -> hhRef).toMap
-      foldPasses(hhRefs, rem, cfg.hhPasses, cfg, Some(mainLinks))._1.get
+      val hhRefs = cfg.hhPasses.map(_.ref -> hhRef).toMap
+      mainLinks.unionByName(foldPasses(hhRefs, rem, cfg.hhPasses, cfg)._1)
     }
 
   /** Post-search confirm (reference "post-search confirm" cells): drop
@@ -597,6 +602,36 @@ object LinkageCascade {
       .select(col("zip3"), explode(array(Seq(-1, 0, 1).map(o =>
         lpad((col("zip3").cast("int") + lit(o)).cast("string"), 3, "0")): _*))
         .as("adj_zip3"))
+
+  /** ZIP3 Adjacency Search (reference 03 cell 98): `passes` re-run over
+    * the post-cascade `remainder` with the zip3 cut widened through
+    * [[zip3Adjacent]] (the small remainder side explodes; `dim` plugs in a
+    * real adjacency table), every pass searching `geoRef`. Runs through
+    * the same pass-precedence fold as the main cascade. Returns (pik,
+    * rec_id, match_weight, pass).
+    */
+  def zip3Stage(geoRef: DataFrame, remainder: DataFrame, passes: Seq[BlockingPass],
+      cfg: LinkageConfig, dim: Option[DataFrame] = None): DataFrame =
+    foldPasses(passes.map(_.ref -> geoRef).toMap, zip3Adjacent(remainder, dim),
+      passes, cfg)._1
+
+  /** MAFMatch (reference 03 cell 24): both sides resolve their address
+    * sans zipcode (the geokey minus its last `|` field) against the Master
+    * Address File `maf(maf_key, mafid)` and block on the minted mafid, so
+    * two renderings of one physical address (e.g. a zip typo) block
+    * together. No remainder anti-join: PVS runs MAFMatch as an
+    * address-resolution pass, not a cascade-tail pass. Returns (pik,
+    * rec_id, match_weight, pass).
+    */
+  def mafStage(census: DataFrame, input: DataFrame, maf: DataFrame,
+      pass: BlockingPass, cfg: LinkageConfig): DataFrame = {
+    def withMaf(side: DataFrame): DataFrame =
+      side.join(maf,
+        regexp_replace(side("geokey"), "\\|[^|]*$", "") === maf("maf_key"))
+        .drop("maf_key")
+    predict(withMaf(census), withMaf(input), pass, cfg)
+      .withColumn("pass", lit(pass.name))
+  }
 
   /** Notebook-04 PIK-rate accounting over a link set (reference
     * 04_calculate_ground_truth_accuracy.ipynb): link and ground-truth-
@@ -743,8 +778,8 @@ object LinkageCascade {
     // wall-clock is the slowest session, not the sum. Results stay
     // deterministic: Memo.par preserves pass order and each
     // session's math is self-contained. (The cascade's passes, by
-    // contrast, are inherently sequential — later passes must not see
-    // records earlier passes linked.)
+    // contrast, carry precedence — an earlier pass's link wins — which
+    // [[foldPasses]] resolves per lookahead group.)
     val sessions: Seq[(Set[String], Map[(String, Int), Double], EmSessionReport)] =
       Memo.par(trainingPasses.map { p => () =>
         val cmps = p.comparisonsFor(cfg)

@@ -1538,13 +1538,12 @@ object LinkageQueries {
     */
   private lazy val cascadeLinks =
     Memo("cascade_links", sides, refFiles)(Memo.one) { (s, d) =>
-      // Checkpoint the ASSEMBLED link set once: with the overlapped
-      // cascade, per-pass links are checkpointed but the within-group
-      // anti-join resolution on top of them is lazy, and every memo
-      // consumer (q32/q33/q36/q37/q39/q83/q84/q112…) re-executed those
-      // ~13 small joins per query (measured +0.3-0.4 s each). One
-      // KB-scale materialization here gives consumers a single
-      // LogicalRDD, like the pre-overlap shape.
+      // Checkpoint the ASSEMBLED link set once: the per-pass links are
+      // checkpointed, but each lookahead group's pass-precedence window
+      // on top of them is lazy, and every memo consumer
+      // (q32/q33/q36/q37/q39/q83/q84/q112…) would re-run those windows
+      // per query. One KB-scale materialization here gives consumers a
+      // single LogicalRDD.
       LinkageCascade.run(cascadeRefs(s, d), input(s, d), config)
         .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     }
@@ -1869,13 +1868,11 @@ object LinkageQueries {
           census(s, d), input(s, d), emPasses(0), config, 3, Some(scoredBlock(s, d))))
         val m2 = fin(LinkageCascade.emHistory(
           census(s, d), input(s, d), emPasses(1), config, 3, None))
-        def q6(x: Double): Double =
-          BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         val rows = comparisons.flatMap(c => c.params.map { case (g, _, _) =>
           val a = m1.get((c.name, g))
           val b = m2.get((c.name, g))
           val comb = (a, b) match {
-            case (Some(x), Some(y)) => q6((x + y) / 2)
+            case (Some(x), Some(y)) => combineM(x, y)
             case (Some(x), None)    => x
             case (None, Some(y))    => y
             case _ => throw new IllegalStateException(s"no session estimates ${c.name}")
@@ -1895,7 +1892,9 @@ object LinkageQueries {
            |levels AS (SELECT * FROM (VALUES $levelRows) AS t(comparison, gamma))
            |SELECT l.comparison, l.gamma, z.m AS m_zip3, y.m AS m_name_yob,
            |       CASE WHEN z.m IS NULL THEN y.m WHEN y.m IS NULL THEN z.m
-           |            ELSE round((z.m + y.m) / 2, 6) END AS m_combined
+           |            ELSE CAST(round((CAST(z.m AS DECIMAL(18,6))
+           |                             + CAST(y.m AS DECIMAL(18,6))) * 0.5, 6) AS DOUBLE)
+           |       END AS m_combined
            |FROM levels l
            |LEFT JOIN m_z_3 z ON z.comparison = l.comparison AND z.gamma = l.gamma
            |LEFT JOIN m_y_3 y ON y.comparison = l.comparison AND y.gamma = l.gamma""".stripMargin
@@ -2788,35 +2787,14 @@ object LinkageQueries {
       "q129_zip3_adjacency",
       (s, d) => {
         reg(s)
-        val links = cascadeLinks(s, d)
-        // Materialized: rem feeds pass 1's predict, pass 2's remainder
-        // derivation AND (via rem2) pass 2's predict; l1 feeds both the
-        // pass-2 anti-join and the final union — without the barriers
-        // each consumer re-runs the anti-join / the whole pass-1 predict
-        // (the foldPasses checkpoint discipline, applied to this manual
-        // two-pass chain). l1 is ids + weight; rem is the small
-        // post-cascade residue.
+        // Materialized: rem feeds both passes' concurrent predicts and
+        // the fold's remainder anti-join; it is the small post-cascade
+        // residue. The two passes resolve through the cascade's own
+        // pass-precedence fold (z1 wins a record both link).
         val rem = input(s, d)
-          .join(links.select("rec_id").distinct(), Seq("rec_id"), "left_anti")
+          .join(cascadeLinks(s, d).select("rec_id").distinct(), Seq("rec_id"), "left_anti")
           .localCheckpoint()
-        val ref = geobase(s, d)
-        val z1 = zip3AdjPasses(0)
-        val z2 = zip3AdjPasses(1)
-        // Both passes predict CONCURRENTLY over the same checkpointed
-        // remainder (the foldPasses lookahead shape, guide §2.6): records
-        // are independent within a pass and zip3Adjacent is a row-local
-        // explode, so predict(ref, zip3Adjacent(rem ∖ L1), z2) ≡
-        // predict(ref, zip3Adjacent(rem), z2) filtered to rec_id ∉ L1 —
-        // the anti-join below applies that filter to the materialized
-        // KB-scale link frames, links identical (oracle green).
-        val zadj = LinkageCascade.zip3Adjacent(rem)
-        val Seq(l1, l2all) = Memo.par(Seq(z1, z2).map { z => () =>
-          LinkageCascade.predict(ref, zadj, z, config)
-            .withColumn("pass", lit(z.name))
-            .localCheckpoint()
-        })
-        val l2 = l2all.join(l1.select("rec_id"), Seq("rec_id"), "left_anti")
-        l1.unionByName(l2)
+        LinkageCascade.zip3Stage(geobase(s, d), rem, zip3AdjPasses, config)
           .select(col("pik"), col("rec_id"),
             round(col("match_weight"), 6).as("mw"), col("pass"))
       },
@@ -2831,14 +2809,8 @@ object LinkageQueries {
       "q130_mafmatch",
       (s, d) => {
         reg(s)
-        val maf = mafFrame(s, d)
-        def withMaf(side: DataFrame): DataFrame =
-          side.join(maf,
-            regexp_replace(side("geokey"), "\\|[^|]*$", "") === maf("maf_key"))
-            .drop("maf_key")
-        LinkageCascade.predict(
-            withMaf(census(s, d)), withMaf(input(s, d)), mafPass, config)
-          .withColumn("pass", lit(mafPass.name))
+        LinkageCascade.mafStage(census(s, d), input(s, d), mafFrame(s, d),
+            mafPass, config)
           .select(col("pik"), col("rec_id"),
             round(col("match_weight"), 6).as("mw"), col("pass"))
       },
@@ -2893,6 +2865,16 @@ object LinkageQueries {
       }
     )
   )
+
+  /** q107's combined m: the EXACT decimal mean of two 6-dp session
+    * estimates, rounded HALF_UP at 6 dp. The binary double mean can land
+    * a ulp below a half — (0.085791 + 0.085792) / 2 is
+    * 0.08579149999999999, which rounds down — so the mean is taken in
+    * BigDecimal, like the oracle's DECIMAL(18,6) sum times 0.5.
+    */
+  private[graft] def combineM(x: Double, y: Double): Double =
+    ((BigDecimal(x) + BigDecimal(y)) / 2)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** The Master Address File: every distinct sans-zip rendering of a
     * current or previous address in the universe, with a MAFID minted by

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.linkage.{BlockingPass, LinkageCascade, LinkageConfig}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Streaming linkage: continuous PIK assignment for records arriving on a
   * stream, scored against a static census reference — the production
@@ -29,29 +28,12 @@ object StreamingLinkage {
   def reconstitute(arrivals: DataFrame, inputStatic: DataFrame): DataFrame =
     arrivals.join(inputStatic, Seq("rec_id"))
 
-  /** One blocked predict pass over a stream of (derived) input records:
-    * block → score → offset → threshold, in append mode. Best-link
-    * resolution is NOT applied here — window aggregation over an unbounded
-    * stream is unsupported and semantically unbounded; resolve per
-    * micro-batch with [[resolveBatch]] (foreachBatch) or downstream.
-    */
-  def scoredLinks(census: DataFrame, inputStream: DataFrame, pass: BlockingPass,
-      cfg: LinkageConfig): DataFrame = {
-    val scored = LinkageCascade.score(
-      LinkageCascade.pairs(census, inputStream, pass),
-      pass.comparisonsFor(cfg), pass.constGammas)
-    val offset =
-      if (pass.weightOffset == 0.0) scored
-      else scored.withColumn("match_weight", col("match_weight") + lit(pass.weightOffset))
-    offset
-      .filter(col("match_weight") >= cfg.thresholdWeight)
-      .select(col("l_pik").as("pik"), col("r_rec_id").as("rec_id"), col("match_weight"))
-  }
-
-  /** Per-micro-batch best-link resolution for a foreachBatch sink: each
-    * record arrives on exactly one micro-batch, so resolving within the
-    * batch equals the batch pass's resolution for that record's candidate
-    * set.
+  /** Per-micro-batch best-link resolution for a foreachBatch sink over a
+    * stream of [[LinkageCascade.candidates]] (block → score → offset →
+    * threshold, append mode; window aggregation over an unbounded stream
+    * is unsupported). Each record arrives on exactly one micro-batch, so
+    * resolving within the batch equals the batch pass's resolution for
+    * that record's candidate set.
     */
   def resolveBatch(scoredBatch: DataFrame): DataFrame =
     LinkageCascade.bestLink(scoredBatch)
@@ -59,7 +41,7 @@ object StreamingLinkage {
   /** One micro-batch of the FULL multi-pass cascade for a foreachBatch
     * sink: anti-join the arrivals against the already-linked state (a
     * record PIKed by an earlier batch never re-enters a search module —
-    * the cross-batch twin of the cascade's per-pass anti-join), then run
+    * the cross-batch twin of the cascade's remainder anti-join), then run
     * the 13 main search modules over the remainder. Returns the batch's
     * new links; the caller unions them into its state (checkpointing the
     * union per batch, as [[graft.streaming.StreamingDedup]] does for its
@@ -105,29 +87,24 @@ object StreamingLinkage {
     * continuous-PIK path's batch-surface parity closure: after the
     * household bridge ([[cascadeFinalize]]), the three modules the batch
     * inventory ships as q128/q129/q130 run over the finalize-time global
-    * state with EXACTLY the batch queries' frames and anti-join
-    * structure, so a replay's module links equal batch q128 ∪ q129 ∪
-    * q130 (StreamingSpec pins it):
+    * state through the SAME functions the batch queries call, so a
+    * replay's module links equal batch q128 ∪ q129 ∪ q130 by construction
+    * (StreamingSpec pins it):
     *
     *  - Movers ([[LinkageCascade.moversStage]]): fully-unPIKed
     *    multi-member households vs `census`, conditioned on the
     *    main+hh GLOBAL link set — a household's last member may arrive
     *    batches after its first, which is why this is a finalize pass,
     *    not a per-batch one (same deferral argument as hhcomp).
-    *  - ZIP3 Adjacency: the two street-soundex passes re-run over the
-    *    post-hh remainder with the zip3 cut widened via
-    *    [[LinkageCascade.zip3Adjacent]] against `geoRef` (the GeoBase
-    *    side; `zip3Dim` plugs a real adjacency table in).
-    *  - MAFMatch: both sides resolve their sans-zip geokey against the
-    *    Master Address File `maf(maf_key, mafid)` and block on the
-    *    minted mafid — like the batch query, NO remainder anti-join
-    *    (PVS runs MAFMatch as an address-resolution pass, not a
-    *    cascade-tail pass).
+    *  - ZIP3 Adjacency ([[LinkageCascade.zip3Stage]]): the two
+    *    street-soundex passes over the post-hh remainder against `geoRef`
+    *    (the GeoBase side; `zip3Dim` plugs a real adjacency table in).
+    *  - MAFMatch ([[LinkageCascade.mafStage]]): address resolution
+    *    against the Master Address File `maf(maf_key, mafid)`, over all
+    *    arrivals (no remainder anti-join, like the batch query).
     *
     * Returns main+hh+movers+zip3+maf links (pik, rec_id, match_weight,
-    * pass). At scale every module is the same blocked equi-join shape as
-    * the batch cascade; the MAF lookup joins on the sans-zip key (at
-    * 100 TB: a bucketed MAF table keyed on maf_key).
+    * pass).
     */
   def cascadeFinalizeAllModules(
       refs: Map[String, DataFrame],
@@ -141,32 +118,16 @@ object StreamingLinkage {
       zip3Passes: Seq[BlockingPass],
       mafPass: BlockingPass,
       zip3Dim: Option[DataFrame] = None): DataFrame = {
-    val slim = (df: DataFrame) =>
-      df.select("pik", "rec_id", "match_weight", "pass")
     val links = cascadeFinalize(refs, allArrivals, accLinks, cfg)
       .localCheckpoint()
-    val movers = LinkageCascade.moversStage(
-      census, allArrivals, links, cfg, moversPass)
     val rem = allArrivals.join(
       links.select("rec_id").distinct(), Seq("rec_id"), "left_anti")
-    val z1 = zip3Passes.head
-    val l1 = LinkageCascade.predict(geoRef,
-        LinkageCascade.zip3Adjacent(rem, zip3Dim), z1, cfg)
-      .withColumn("pass", lit(z1.name)).localCheckpoint()
-    val rem2 = rem.join(l1.select("rec_id"), Seq("rec_id"), "left_anti")
-    val z2 = zip3Passes(1)
-    val l2 = LinkageCascade.predict(geoRef,
-        LinkageCascade.zip3Adjacent(rem2, zip3Dim), z2, cfg)
-      .withColumn("pass", lit(z2.name))
-    def withMaf(side: DataFrame): DataFrame =
-      side.join(maf,
-        regexp_replace(side("geokey"), "\\|[^|]*$", "") === maf("maf_key"))
-        .drop("maf_key")
-    val mafLinks = LinkageCascade.predict(
-        withMaf(census), withMaf(allArrivals), mafPass, cfg)
-      .withColumn("pass", lit(mafPass.name))
-    slim(links).unionByName(slim(movers)).unionByName(slim(l1))
-      .unionByName(slim(l2)).unionByName(slim(mafLinks))
+    Seq(
+      links,
+      LinkageCascade.moversStage(census, allArrivals, links, cfg, moversPass),
+      LinkageCascade.zip3Stage(geoRef, rem, zip3Passes, cfg, zip3Dim),
+      LinkageCascade.mafStage(census, allArrivals, maf, mafPass, cfg)
+    ).map(_.select("pik", "rec_id", "match_weight", "pass")).reduce(_ unionByName _)
   }
 
   /** q39-style per-pass accounting over the streamed links — the same

@@ -595,6 +595,70 @@ class LinkageSpec extends SparkTestBase {
       s"layout changed links: only-base=${(base -- alt).take(5)} only-alt=${(alt -- base).take(5)}")
   }
 
+  test("cascade equals the strict one-pass-at-a-time sequential cascade") {
+    GraftFunctions.register(spark)
+    import org.apache.spark.sql.DataFrame
+    val refs = LinkageQueries.cascadeRefs(spark, sfDir)
+    def keyed(df: DataFrame): Set[(Long, Long, String)] =
+      df.select("pik", "rec_id", "pass").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    // The reference PVS order: each pass predicts over exactly the records
+    // no earlier pass linked. Returns each pass's links and the remainder
+    // it searched.
+    def sequential(passes: Seq[BlockingPass], ref: BlockingPass => DataFrame,
+        start: DataFrame): Seq[(DataFrame, DataFrame)] =
+      passes.foldLeft((Seq.empty[(DataFrame, DataFrame)], start)) {
+        case ((done, rem), pass) =>
+          val links = LinkageCascade.predict(ref(pass), rem, pass, cfg)
+            .withColumn("pass", lit(pass.name)).localCheckpoint()
+          (done :+ (links -> rem),
+            rem.join(links.select("rec_id"), Seq("rec_id"), "left_anti").localCheckpoint())
+      }._1
+    val main = sequential(cfg.passes, p => refs(p.ref), input)
+    val mainLinks = main.map(_._1).reduce(_ unionByName _)
+    val mainRem = input.join(mainLinks.select("rec_id"), Seq("rec_id"), "left_anti")
+    val hhRef = LinkageCascade.hhcompReference(refs("census"), input, mainLinks)
+      .localCheckpoint()
+    val hh = sequential(cfg.hhPasses, _ => hhRef,
+      mainRem.withColumn("hh_geokey", col("geokey_blk")))
+    val expected = (main ++ hh).map(x => keyed(x._1)).reduce(_ ++ _)
+    val actual = keyed(LinkageCascade.run(refs, input, cfg))
+    assert(expected.nonEmpty && cfg.hhPasses.nonEmpty)
+    assert(actual == expected,
+      s"fold vs sequential: only-fold=${(actual -- expected).take(5)} " +
+        s"only-sequential=${(expected -- actual).take(5)}")
+
+    // Non-vacuity: the fold's per-group resolution must actually decide
+    // something — some record is linked by two passes of one lookahead
+    // group when both search the group-entry remainder.
+    val contested = LinkageCascade.passGroups(cfg.passes.indices).map { group =>
+      val entry = main(group.head)._2
+      group.map { i =>
+        val pass = cfg.passes(i)
+        LinkageCascade.predict(refs(pass.ref), entry, pass, cfg).select("rec_id")
+      }.reduce(_ union _).groupBy("rec_id").count().filter(col("count") >= 2).count()
+    }.sum
+    assert(contested > 0, "no record is linked by two passes of one group")
+  }
+
+  test("pass precedence keeps each record's lowest-ordinal link") {
+    import spark.implicits._
+    val tagged = Seq(
+      (10L, 1L, 12.0, "p_b", 2), (11L, 1L, 9.0, "p_a", 1), // ordinal 1 wins rec 1
+      (12L, 2L, 8.0, "p_c", 3)
+    ).toDF("pik", "rec_id", "match_weight", "pass", "pass_ord")
+    val resolved = LinkageCascade.firstPassWins(tagged)
+    assert(resolved.columns.toSeq == Seq("pik", "rec_id", "match_weight", "pass"))
+    val kept = resolved.select("pik", "rec_id", "pass").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(kept == Set((11L, 1L, "p_a"), (12L, 2L, "p_c")), s"unexpected: $kept")
+  }
+
+  test("q107 combines two m estimates by their exact decimal mean") {
+    // The binary double mean is 0.08579149999999999 and would round down.
+    assert(LinkageQueries.combineM(0.085791, 0.085792) == 0.085792)
+  }
+
   test("block-skew report counts candidate pairs per key exactly") {
     GraftFunctions.register(spark)
     val pass = cfg.passes.find(_.name == "p4_name_yob").get
